@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
+  HadoopFsRelation, LogicalRelation}
 
 /** Harness-table loader (see /root/repo/TESTDATA.md). One parquet file per table. */
 object Tables {
@@ -52,26 +54,26 @@ object Tables {
 
   /** Parquet footer metadata (row count, row-group count) per source file,
     * cached JVM-wide like the schema: a plain driver-side footer read — NO
-    * Spark job, no RDD instantiation — keyed by (path, mtime). [[spread]]
-    * consults it instead of probing `df.rdd.getNumPartitions`, which eagerly
-    * planned the scan (file listing + partition math) on every invocation.
+    * Spark job, no RDD instantiation — keyed by the file's Hadoop status
+    * (path, modification time, length), so a file rewritten in place on any
+    * filesystem is read afresh. [[spread]] consults it instead of probing
+    * `df.rdd.getNumPartitions`, which eagerly planned the scan (file listing +
+    * partition math) on every invocation. Cleared past [[MaxFooters]] entries.
     */
   private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), (Long, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (Long, Int)]()
+  private val MaxFooters = 100 * 1000
 
-  private def footerMeta(spark: SparkSession, path: String): (Long, Int) = {
-    val mtime = try new java.io.File(
-      java.net.URI.create(path).getPath).lastModified() catch {
-      case _: Exception => 0L
-    }
-    footerCache.computeIfAbsent((path, mtime), _ => {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        spark.sessionState.newHadoopConf())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try (r.getRecordCount, r.getFooter.getBlocks.size())
-      finally r.close()
-    })
+  private def footerMeta(spark: SparkSession, f: FileStatusWithMetadata): (Long, Int) = {
+    if (footerCache.size > MaxFooters) footerCache.clear()
+    footerCache.computeIfAbsent(
+      (f.getPath.toString, f.getModificationTime, f.getLen), _ => {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          f.getPath, spark.sessionState.newHadoopConf())
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try (r.getRecordCount, r.getFooter.getBlocks.size())
+        finally r.close()
+      })
   }
 
   /** Scale-adaptive input spread for CPU-heavy per-row operators (optimization
@@ -109,16 +111,14 @@ object Tables {
       .orElse(sys.env.get("SPARK_GRAFT_SPREAD")).getOrElse("auto")
     if (mode == "off") return df
     val cores = spark.sparkContext.defaultParallelism
-    // the source files, from the already-analyzed plan — no scan planning
+    // the source files' statuses, from the analyzed plan's file indexes
     val files = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.inputFiles.toSeq
-          case _ => Seq.empty[String]
-        }
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+        h.location.listFiles(Nil, Nil).flatMap(_.files)
     }.flatten
-    if (files.isEmpty) return df
+    // every file holds at least one row group: no footer can lift the natural
+    // parallelism below the core count
+    if (files.isEmpty || files.size >= cores) return df
     val metas = files.map(f =>
       try footerMeta(spark, f) catch { case _: Exception => (0L, 1) })
     val rows = metas.map(_._1).sum

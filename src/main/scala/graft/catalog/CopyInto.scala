@@ -115,10 +115,10 @@ object CopyInto {
 
   /** `version` is None when no new files matched (no commit was written).
     * `filesQuarantined` counts matched source files SKIPPED because their
-    * path contains a control character the line-oriented ingest ledger cannot
-    * record — a programmatic signal (the skip also log.warns per file) so
-    * pipelines can alert on persistently-quarantined files instead of
-    * scraping logs; rename the files to ingest them.
+    * path contains a control character: COPY INTO never loads such a file,
+    * on any run, until it is renamed. It is a programmatic signal (the skip
+    * also log.warns per file) so pipelines can alert on persistently
+    * quarantined files instead of scraping logs.
     */
   final case class CopyResult(version: Option[Long], filesLoaded: Long,
       rowsLoaded: Long, filesQuarantined: Long = 0L)
@@ -190,17 +190,17 @@ object CopyInto {
     def qualified(st: FileStatus): String =
       fs.makeQualified(st.getPath).toString
 
-    // files whose path holds a control character (a newline is legal on
-    // POSIX) are quarantined at candidate time instead of aborting: throwing
-    // would make ONE badly-named file a poison pill blocking every other
-    // file's ingestion until a manual rename. Skipped files warn loudly on
-    // every run until renamed.
-    val (recordable, quarantined) =
+    // the rule: a file whose path holds a control character (a newline is
+    // legal on POSIX) is never loaded. It is skipped at candidate time rather
+    // than aborting the run — throwing would make ONE badly-named file a
+    // poison pill blocking every other file's ingestion until a manual
+    // rename — and warns on every run until renamed.
+    val (loadable, quarantined) =
       listed.partition(st => !qualified(st).exists(_ < ' '))
     quarantined.foreach { st =>
       log.warn("COPY INTO: SKIPPING source file whose path contains a " +
-        "control character (the line-oriented ingest ledger cannot record " +
-        s"it) — rename it to ingest: ${qualified(st).map(c => if (c < ' ') f"\\u$c%04x" else c.toString).mkString}")
+        "control character (such files are never loaded) — rename it to " +
+        s"ingest: ${qualified(st).map(c => if (c < ' ') f"\\u$c%04x" else c.toString).mkString}")
     }
 
     // in-force manifests NOT covered by the compact artifact — the per-run tail
@@ -214,11 +214,11 @@ object CopyInto {
     lazy val compactBody: Set[String] = compactC.fold(Set.empty[String])(c =>
       manifestPaths(fs, new Path(ingestDir, f"compact.$c%06d.jsonl")).toSet)
     val fresh =
-      if (force) recordable
+      if (force) loadable
       else compactC match {
-        case None => recordable.filterNot(st => tailLoaded(qualified(st)))
+        case None => loadable.filterNot(st => tailLoaded(qualified(st)))
         case Some(c) =>
-          val candidates = recordable.filterNot(st => tailLoaded(qualified(st)))
+          val candidates = loadable.filterNot(st => tailLoaded(qualified(st)))
           readBloom(fs, new Path(ingestDir, f"compact.$c%06d.bf")) match {
             case Some(bf) if candidates.forall(st =>
                 !bf.mightContainString(qualified(st))) =>

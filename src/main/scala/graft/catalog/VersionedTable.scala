@@ -6,6 +6,7 @@ import java.time.Instant
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A minimal versioned parquet table: commit log + time travel — the full K7 shape the
   * reference gets from Delta (`DeltaTable.forPath(...).history()` and version reads,
@@ -48,10 +49,14 @@ import org.apache.spark.sql.functions._
   *    data and log) and is invisible to every reader — readers resolve the LOG, not
   *    the directory listing. [[vacuum]] reclaims such orphans.
   *
-  * Scale notes: the log is one tiny JSON file per commit, listed driver-side (pure
-  * metadata); data files stream through the ordinary parquet reader with full
-  * pushdown/pruning, and an as-of read of K commits is a K-path parquet scan, not a
-  * union of K DataFrames (one FileSourceScan, shared schema).
+  * Read path: the log, not a directory listing, decides what a snapshot reads.
+  * The log is one tiny JSON file per commit, listed driver-side (pure metadata).
+  * A read of K live commits is ONE parquet scan over a [[LogFileIndex]] whose
+  * roots are those commits' data dirs, partitioned or not: the read schema comes
+  * from the log, each write-once data dir is listed once per JVM
+  * ([[DataDirCache]]) and only when Spark plans the scan, and partitions a later
+  * scoped merge shadowed are left out of the index's partition spec. Data files
+  * stream through the ordinary parquet reader with full pushdown and pruning.
   */
 object VersionedTable {
 
@@ -124,8 +129,8 @@ object VersionedTable {
   /** Write `df` as the next commit; returns the committed version.
     * `operation` is "overwrite" or "append". `partitionBy` lays each commit's data
     * out Hive-partitioned (readers get partition pruning across every visible
-    * commit — each data dir is its own partitioned root, and the multi-path scan
-    * rediscovers the partition columns).
+    * commit — each data dir is its own partitioned root, and one log-resolved
+    * file index spans them all).
     */
   def write(df: DataFrame, location: String, operation: String = "overwrite",
       partitionBy: Seq[String] = Nil): Long = {
@@ -1403,20 +1408,20 @@ object VersionedTable {
       else d
     }
 
-  /** Raw data-dir read for the streaming source's append fast path: serves the
-    * files under the table's LOGICAL schema (identity when no column was ever
-    * renamed/dropped — then the fixed-schema parquet read is used verbatim,
-    * keeping the zero-copy behavior).
+  /** The data of `cs` for the streaming source's append batch, served under
+    * the table's LOGICAL schema: one [[LogFileIndex]] scan over their data
+    * dirs, read with `schema` itself when no column was ever renamed or
+    * dropped, else with the commits' physical schema mapped to logical names.
     */
-  private[graft] def readDataDirsLogical(spark: SparkSession, location: String,
-      dirs: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private[graft] def readCommitsLogical(spark: SparkSession, location: String,
+      cs: Seq[Commit], schema: StructType): DataFrame = {
     val mapping = columnMapping(spark, location)
-    if (mapping.isEmpty)
-      spark.read.option("mergeSchema", "true").schema(schema).parquet(dirs: _*)
+    def scan(s: Seq[Commit] => Option[StructType]) =
+      scanCommits(spark, cs, keepMeta = false, perCommit = false, s)(c =>
+        LogFileIndex.dir(spark, dataPath(location, c)))
+    if (mapping.isEmpty) scan(_ => Some(schema))
     else {
-      val raw = toLogical(
-        spark.read.option("mergeSchema", "true").parquet(dirs: _*), mapping)
+      val raw = toLogical(scan(logReadSchema), mapping)
       schema.fields.foldLeft(raw) { (d, f) =>
         if (d.columns.exists(_.equalsIgnoreCase(f.name))) d
         else d.withColumn(f.name, lit(null).cast(f.dataType))
@@ -3574,6 +3579,18 @@ object VersionedTable {
       fields.values.toSeq.map(_.copy(nullable = true))))
   }
 
+  /** The live commits' data as ONE parquet scan over a [[LogFileIndex]]: the
+    * log names the roots, [[DataDirCache]] serves their listings, and the read
+    * schema comes from the log ([[logReadSchema]]), so building the plan lists
+    * nothing and opens no footer. Partitions a LATER scoped merge rewrote are
+    * left out of the index's partition spec — a file-level exclusion, so a
+    * partitioned table of N live commits plans as one scan, not N unioned
+    * branches. Per-file-stat pruned commits list only their surviving files.
+    * Commits are read one per branch, unioned by name, only where they must be
+    * reconciled one by one: a declared type widening, or live commits that
+    * disagree on the partition layout. Legacy commits with no recorded schema
+    * keep `mergeSchema` inference, run over the index's files.
+    */
   private def assembleScanPhysical(spark: SparkSession, location: String,
       live: Seq[Commit], keepMeta: Boolean, widened: Boolean = false,
       fileSubset: Map[String, Seq[String]] = Map.empty): DataFrame = {
@@ -3582,58 +3599,30 @@ object VersionedTable {
     val scans = live.filter(c =>
       !((c.operation == "delete" || c.operation == "replace") && c.data_dir.isEmpty)
         && fileSubset.get(c.data_dir).forall(_.nonEmpty))
-    def meta(df: DataFrame): DataFrame =
+    scanCommits(spark, scans, keepMeta, widened, logReadSchema) { c =>
+      val root = LogFileIndex.root(spark, dataPath(location, c))
+      ScanRoot(root, fileSubset.get(c.data_dir).fold(Seq(root))(
+          _.map(LogFileIndex.root(spark, _))),
+        live.filter(_.version > c.version).flatMap(_.replacedPartitions))
+    }
+  }
+
+  /** `cs` as one [[LogFileIndex]] scan — or one per commit, unioned by name,
+    * when `perCommit` or when they disagree on the partition layout. `keepMeta`
+    * adds the (file, row-index) identity columns the DV anti-join needs.
+    */
+  private def scanCommits(spark: SparkSession, cs: Seq[Commit], keepMeta: Boolean,
+      perCommit: Boolean, schema: Seq[Commit] => Option[StructType])(
+      root: Commit => ScanRoot): DataFrame =
+    (if (perCommit || cs.map(_.partition_by).distinct.size > 1) cs.map(Seq(_))
+     else Seq(cs)).map { g =>
+      val df = LogFileIndex.scan(spark, g.map(root),
+        g.headOption.toSeq.flatMap(_.partition_by.split(",")).filter(_.nonEmpty),
+        schema(g))
       if (!keepMeta) df
       else df.withColumn(DvFileCol, col("_metadata.file_path"))
         .withColumn(DvPosCol, col("_metadata.row_index"))
-    if (scans.forall(_.partition_by.isEmpty) && !widened) {
-      // one multi-path parquet scan — not a union of per-version DataFrames.
-      // The read schema comes FROM THE LOG when every scanned commit recorded
-      // one ([[logReadSchema]]): additive appends still surface (new columns
-      // widen the union, older commits read NULLs), but no footer is opened
-      // to learn it. Legacy logs fall back to mergeSchema inference — the
-      // same semantics, plus one footer-merge job.
-      // (Scoped merges require a partitioned table, so no shadowing here.)
-      // Per-file-stat pruned commits list their SURVIVING files explicitly —
-      // the intra-commit skipping tier (filestats opt-in, unpartitioned only).
-      val paths = scans.flatMap(c =>
-        fileSubset.getOrElse(c.data_dir, Seq(dataPath(location, c))))
-      meta(logReadSchema(scans) match {
-        case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      })
-    } else
-      // hive-partitioned commits: Spark cannot infer partitions across multiple
-      // roots ("conflicting directory structures"), so each commit dir is read as
-      // its own partitioned root and the branches union. Filters push through the
-      // Union into every branch, so partition pruning is intact; the per-commit
-      // fixed cost stays small because overwrite commits reset the live set.
-      // Partitions a LATER partition-scoped merge rewrote are shadowed out of
-      // each earlier branch with a partition-column filter — pure partition
-      // pruning, no data rows read from the shadowed directories.
-      scans.map { c =>
-        val root = dataPath(location, c)
-        // per-branch schema from this commit's own log entry (partition
-        // columns INCLUDED in the recorded schema, so their types are the
-        // written ones, not directory-name re-inference); legacy commits fall
-        // back to inference per branch
-        def reader = logReadSchema(Seq(c)) match {
-          case Some(schema) => spark.read.schema(schema)
-          case None => spark.read.option("mergeSchema", "true")
-        }
-        // a per-file-stat pruned partitioned commit lists its surviving files
-        // explicitly; basePath keeps the `k=v/` partition columns materializing
-        val branch = meta(fileSubset.get(c.data_dir) match {
-          case Some(files) => reader.option("basePath", root).parquet(files: _*)
-          case None => reader.parquet(root)
-        })
-        val shadowed = live.filter(_.version > c.version)
-          .flatMap(_.replacedPartitions)
-        val hit = shadowed.map(_.map { case (k, v) => col(k) === lit(v) }
-          .reduce(_ && _)).reduceOption(_ || _)
-        hit.fold(branch)(p => branch.filter(!coalesce(p, lit(false))))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Subtract the live deletion vectors from a meta-carrying scan: ONE anti-join
     * on (file, pos) — broadcast while the DV total (known from the log) is small,
@@ -3643,8 +3632,9 @@ object VersionedTable {
   private def applyDvs(spark: SparkSession, location: String, scan: DataFrame,
       dvCommits: Seq[Commit]): DataFrame = {
     // DV files have one fixed writer-controlled shape — no schema inference
-    val dv = spark.read.schema("file STRING, pos BIGINT")
-      .parquet(dvCommits.map(c => dvPath(location, c)): _*)
+    val dv = LogFileIndex.scan(spark,
+      dvCommits.map(c => LogFileIndex.dir(spark, dvPath(location, c))), Nil,
+      Some(StructType.fromDDL("file STRING, pos BIGINT")))
     val hinted =
       if (dvCommits.map(_.replaced_rows).sum <= DvBroadcastMaxRows) broadcast(dv)
       else dv
@@ -4065,7 +4055,8 @@ object VersionedTable {
   private def valve(m: java.util.concurrent.ConcurrentHashMap[_, _]): Unit =
     if (m.size() > MaxCachedLogEntries) m.clear()
 
-  /** Drop every cached log artifact under `location` — called on table
+  /** Drop every cached log artifact and data-dir listing ([[DataDirCache]])
+    * under `location` — called on table
     * create (version-0 claim) and drop, because the (path, mtime, length)
     * cache key can collide across a drop-and-recreate at the same location
     * on filesystems with second-granularity mtimes (commit lines are near
@@ -4084,6 +4075,7 @@ object VersionedTable {
     purge(commitFileCache)
     purge(checkpointFileCache)
     purge(archiveCache)
+    DataDirCache.invalidate(location)
   }
 
   private def logStateOnce(fs: FileSystem, location: String): LogState = {

@@ -24,13 +24,15 @@ import graft.catalog.VersionedTable
   * }}}
   *
   * Plan quality is the point of the design: [[VersionedTable.readAsOf]] already
-  * resolves to ONE native multi-path parquet scan, so for the common (unpartitioned)
-  * case [[GraftTableRelations.snapshotRelation]] unwraps and returns that scan's own
-  * `HadoopFsRelation` — the DataSource path yields the IDENTICAL vectorized,
-  * pushdown-capable plan as the Scala API, not an RDD[Row] detour. Only the
-  * hive-partitioned union and the change-feed read (a union by construction) use the
-  * [[DataFrameRelation]] fallback, which still pushes column pruning and filters
-  * into the underlying parquet branches before bridging to RDD.
+  * resolves to ONE native parquet scan over the log-resolved file index, so for
+  * the common case [[GraftTableRelations.snapshotRelation]] unwraps and returns
+  * that scan's own `HadoopFsRelation` — the DataSource path yields the IDENTICAL
+  * vectorized, pushdown-capable plan as the Scala API, not an RDD[Row] detour.
+  * Only snapshots that are more than one relation (deletion vectors, renamed or
+  * added columns, declared widenings) and the change-feed read (a union by
+  * construction) use the [[DataFrameRelation]] fallback, which still pushes
+  * column pruning and filters into the underlying parquet scans before bridging
+  * to RDD.
   */
 object GraftTableRelations {
 
@@ -54,8 +56,7 @@ object GraftTableRelations {
       case None => VersionedTable.read(spark, location)
     }
     df.queryExecution.analyzed match {
-      // the unpartitioned fast path: the snapshot IS one parquet relation — serve
-      // it directly, byte-for-byte the plan spark.read.parquet would build
+      // the fast path: the snapshot IS one parquet relation — serve it directly
       case lr: LogicalRelation => lr.relation
       case _ => new DataFrameRelation(ctx, df)
     }
@@ -73,8 +74,8 @@ object GraftTableRelations {
   }
 }
 
-/** V1 bridge for plans that are not a single file relation (partitioned unions,
-  * change feeds). Column pruning and filters are applied to the DataFrame BEFORE
+/** V1 bridge for plans that are not a single file relation (deletion-vector
+  * joins, change feeds). Column pruning and filters are applied to the DataFrame BEFORE
   * the RDD bridge, so they reach the parquet branches through the Union — the scan
   * reads only what survives pushdown; Spark re-applies the filters on top, which is
   * harmless (handledFilters stays conservative).

@@ -207,14 +207,12 @@ class GraftTableSource(
           // under ignoreChanges a DV update's rewritten rows are served like
           // Delta's ignoreChanges serves rewritten files; pure deletes add no
           // rows (data_dir empty) and are skipped by the nonEmpty guard
-          val appendDirs = cs
+          val appends = cs
             .filter(c => c.operation == "append" || isChosenStart(c) ||
               (ignoreChanges && c.operation == "update"))
             .filter(_.data_dir.nonEmpty)
-            .map(c => s"$location/_data/${c.data_dir}")
-          if (appendDirs.isEmpty) emptyBatch
-          else VersionedTable.readDataDirsLogical(spark, location, appendDirs,
-            schema)
+          if (appends.isEmpty) emptyBatch
+          else VersionedTable.readCommitsLogical(spark, location, appends, schema)
         }
     }
   }

@@ -63,9 +63,9 @@ class CopyIntoSpec extends AnyFunSuite with SharedSpark {
     createTable(loc)
     docsDf.filter(col("doc_id") <= 2).coalesce(1)
       .write.mode("append").parquet(s"$root/src")
-    // plant a file whose NAME carries a newline (legal on POSIX) — the
-    // line-oriented ledger cannot record it; it must be skipped with a
-    // warning, not abort the whole run
+    // plant a file whose NAME carries a newline (legal on POSIX) — such
+    // paths are never loaded; it must be skipped with a warning, not abort
+    // the whole run
     val bad = java.nio.file.Paths.get(s"$root/src", "bad\nname.parquet")
     docsDf.filter(col("doc_id") === 5).coalesce(1)
       .write.parquet(s"$root/tmpbad")
