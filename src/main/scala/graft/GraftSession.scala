@@ -6,6 +6,12 @@ import org.apache.spark.sql.SparkSession
   * concerns (AQE on, FileOutputCommitter v2 with ignored cleanup failures,
   * `mage-programs/orders_delta_lake.py:27-31`) plus local-mode sizing and the nanosecond
   * parquet compatibility flag, with the custom SQL functions registered.
+  *
+  * The v2 committer serves only writes outside a versioned table (reports,
+  * exports, plain `df.write`). A table's own `_data/<dir>` writes go through
+  * [[graft.catalog.StagedCommitProtocol]], which the first staged write installs
+  * in its session (unless the session names another commit protocol): tasks
+  * write straight into the staged dir, with no rename, `_SUCCESS` or `.crc`.
   */
 object GraftSession {
 

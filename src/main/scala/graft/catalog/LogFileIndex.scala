@@ -1,5 +1,6 @@
 package graft.catalog
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
@@ -10,9 +11,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
 /** The listings of table-owned `_data/<dir>` roots, shared by every read in the
   * JVM. A data dir is write-once once the commit naming it is claimed — writers
   * stage into writer-unique dirs and never touch a claimed one — so a listing
-  * never goes stale and each dir is listed at most once per JVM. Schemas
-  * inferred for legacy commits (no recorded schema) are kept here too, keyed by
-  * the roots they were inferred over. [[invalidate]] drops a location's entries
+  * never goes stale. A staged write hands its files over as it commits
+  * ([[StagedWrite]]) and a dir read cold is taken from its file manifest, so
+  * only a dir written without one (a legacy commit) is ever listed, at most
+  * once per JVM. Schemas inferred for legacy commits (no recorded schema) are
+  * kept here too, keyed by the roots they were inferred over. [[invalidate]] drops a location's entries
   * on table create and drop, where a legacy `v=<N>` dir name can come back
   * holding other files. Bounded: past [[MaxFiles]] held file statuses the least
   * recently used listings go first.
@@ -38,6 +41,14 @@ object DataDirCache extends FileStatusCache {
   override def invalidateAll(): Unit = synchronized {
     listings.clear(); held = 0L; schemas.clear()
   }
+
+  /** Take each of `roots` not held yet from its staged-write manifest; a root
+    * without one is left to the listing.
+    */
+  def seed(conf: Configuration, roots: Seq[Path]): Unit =
+    for (r <- roots if getLeafFiles(r).isEmpty;
+         files <- StagedWrite.manifested(r.getFileSystem(conf), r))
+      putLeafFiles(r, files.toArray)
 
   /** Drop every listing and inferred schema under `location`. */
   def invalidate(location: String): Unit = synchronized {
@@ -70,7 +81,7 @@ private[catalog] final case class ScanRoot(root: Path, paths: Seq[Path],
     shadowed: Seq[Seq[(String, String)]] = Nil)
 
 /** A file index resolved from the commit log: the live commits name the roots,
-  * [[DataDirCache]] serves their listings, and nothing is listed until Spark
+  * [[DataDirCache]] serves their files, and nothing is read until Spark
   * plans the scan — a read that only wants the schema lists nothing. Partitions
   * a later scoped merge shadowed are left out of the partition spec, so one scan
   * serves a partitioned table of any number of commits. Equal by its roots and
@@ -83,6 +94,7 @@ private[catalog] final case class LogFileIndex(roots: Seq[ScanRoot],
   override def rootPaths: Seq[Path] = roots.flatMap(_.paths)
 
   private lazy val index: InMemoryFileIndex = {
+    DataDirCache.seed(spark.sessionState.newHadoopConf(), roots.map(_.root))
     // the commit roots are the partition base paths; Spark's check that all
     // leaf dirs share ONE base path is what `ignoreInvalidPartitionPaths` lifts
     val listed = new InMemoryFileIndex(spark, roots.map(_.root),
@@ -143,6 +155,11 @@ private[catalog] object LogFileIndex {
     val r = root(spark, path)
     ScanRoot(r, Seq(r))
   }
+
+  /** One dir read whole: a [[scan]] of the single root `path`. */
+  def scanDir(spark: SparkSession, path: String, partitionColumns: Seq[String] = Nil,
+      schema: Option[StructType] = None): DataFrame =
+    scan(spark, Seq(dir(spark, path)), partitionColumns, schema)
 
   /** One parquet scan of `roots` over a [[LogFileIndex]]. `schema` is the full
     * read schema, partition columns included, when the log records it; None

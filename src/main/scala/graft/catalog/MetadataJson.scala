@@ -1,6 +1,8 @@
 package graft.catalog
 
-import java.io.StringWriter
+import java.io.{ByteArrayOutputStream, StringWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.zip.{Deflater, DeflaterOutputStream, Inflater, InflaterOutputStream}
 
 import scala.jdk.CollectionConverters._
 
@@ -13,8 +15,8 @@ import VersionedTable.Commit
 
 /** The one JSON codec of every metadata file the program writes or reads:
   * commit bodies and checkpoint lines, the `_ddl` archive, the keyed sidecars,
-  * the vacuum floor, the COPY INTO ledger, index-manifest pins and the dedup
-  * index params. Jackson escapes every string it writes (quotes, backslashes
+  * the staged dirs' file manifests, the vacuum floor, the COPY INTO ledger,
+  * index-manifest pins and the dedup index params. Jackson escapes every string it writes (quotes, backslashes
   * and control characters), so no caller has to keep its strings "JSON-safe".
   *
   * Two departures from strict JSON keep older files readable:
@@ -102,5 +104,39 @@ private[graft] object MetadataJson {
       entries("sstats")(v => (v.path(0).asText(""), v.path(1).asText(""))),
       entries("nulls")(_.asLong), str("schema"))
     Some(c).filter(c => c.version >= 0 && c.operation.nonEmpty)
+  }
+
+  /** A staged dir's file manifest: one object of (path relative to the dir →
+    * length), raw-deflated. It names every partition dir a write touched, and
+    * those names repeat so much that deflate shrinks a 100-file manifest about
+    * 15-fold — within the bytes of the `.crc` sidecars the direct write drops.
+    */
+  def encodeFiles(files: Seq[(String, Long)]): Array[Byte] = {
+    val out = new ByteArrayOutputStream
+    val deflater = new Deflater(Deflater.BEST_COMPRESSION, true)
+    val z = new DeflaterOutputStream(out, deflater)
+    try z.write(obj(g => files.foreach { case (p, n) => g.writeNumberField(p, n) })
+      .getBytes(UTF_8))
+    finally { z.close(); deflater.end() }
+    out.toByteArray
+  }
+
+  /** The (relative path, length) entries of a manifest; None for a truncated
+    * or malformed one.
+    */
+  def decodeFiles(bytes: Array[Byte]): Option[Seq[(String, Long)]] = {
+    val out = new ByteArrayOutputStream
+    val inflater = new Inflater(true)
+    val z = new InflaterOutputStream(out, inflater)
+    val body =
+      try {
+        z.write(bytes); z.close()
+        Some(new String(out.toByteArray, UTF_8)).filter(_ => inflater.finished())
+      }
+      catch { case _: java.io.IOException => None }
+      finally inflater.end()
+    body.flatMap(parse).map(_.properties.asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asLong(-1L)))
+      .filter(_.forall(_._2 >= 0))
   }
 }

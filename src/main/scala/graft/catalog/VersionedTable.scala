@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.StructType
   *  - `_data/d-<uuid>/` — the parquet files one commit added. Dir names are
   *    writer-unique (Delta-style unique file naming), so concurrent writers NEVER
   *    touch each other's data files; the commit log maps versions to data dirs.
+  *  - `_data/<dir>/_files.json.deflate` — the dir's file manifest: each file
+  *    the write committed, with its length ([[StagedWrite]]).
   *  - `_data/c-<uuid>/` — a merge commit's materialized Change-Data-Feed rows
   *    (when written with `changeFeed = true`); resolved by [[readChanges]].
   *  - `_commit_log/<N>.json` — one file per commit: version, operation, timestamp,
@@ -49,12 +51,22 @@ import org.apache.spark.sql.types.StructType
   *    data and log) and is invisible to every reader — readers resolve the LOG, not
   *    the directory listing. [[vacuum]] reclaims such orphans.
   *
+  * Write path: every `_data/<dir>` write goes through [[StagedWrite.parquet]].
+  * Its tasks write straight into the staged dir ([[StagedCommitProtocol]]): the
+  * dir is invisible until the claim, so there is no `_temporary` dir, no
+  * task- or job-commit rename, no `_SUCCESS` marker and no `.crc` sidecar. The
+  * job commit writes the dir's file manifest, built from the task commit
+  * messages, before the claim. Readers take a dir's files from its manifest,
+  * never from a listing, so a file a failed or speculative task attempt left
+  * in the dir is never served. Dirs written before the manifest existed, or by
+  * a user-set commit protocol, carry none and are listed instead.
+  *
   * Read path: the log, not a directory listing, decides what a snapshot reads.
   * The log is one tiny JSON file per commit, listed driver-side (pure metadata).
   * A read of K live commits is ONE parquet scan over a [[LogFileIndex]] whose
   * roots are those commits' data dirs, partitioned or not: the read schema comes
-  * from the log, each write-once data dir is listed once per JVM
-  * ([[DataDirCache]]) and only when Spark plans the scan, and partitions a later
+  * from the log, each write-once data dir's files come from its write or its
+  * manifest ([[DataDirCache]]) and only when Spark plans the scan, and partitions a later
   * scoped merge shadowed are left out of the index's partition spec. Data files
   * stream through the ordinary parquet reader with full pushdown and pruning.
   */
@@ -1335,10 +1347,8 @@ object VersionedTable {
     // matters: stage the materialized copy, claim, then clear.
     val dataDir = s"d-${java.util.UUID.randomUUID()}"
     val obs = Observation(s"vt_rows_$dataDir")
-    val writer = snap.observe(obs, count(lit(1)).as("rows"))
-      .write.mode("errorifexists")
-    (if (partitioning.nonEmpty) writer.partitionBy(partitioning: _*) else writer)
-      .parquet(s"$location/_data/$dataDir")
+    StagedWrite.parquet(snap.observe(obs, count(lit(1)).as("rows")),
+      s"$location/_data/$dataDir", partitioning)
     val rows = obs.get("rows").asInstanceOf[Long]
     if (!claimCommit(fs, location, latest.version + 1, "compact", rows, dataDir,
         partitioning)) {
@@ -2079,9 +2089,9 @@ object VersionedTable {
           upserts, location, partitioning, constraints(spark, location))
         val dvDir = s"v-${java.util.UUID.randomUUID()}"
         val obs = Observation(s"vt_dv_$dvDir")
-        matched.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-          .observe(obs, count(lit(1)).as("rows"))
-          .write.mode("errorifexists").parquet(s"$location/_data/$dvDir")
+        StagedWrite.parquet(
+          matched.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
+            .observe(obs, count(lit(1)).as("rows")), s"$location/_data/$dvDir")
         val changeDir = if (changeFeed) s"c-${java.util.UUID.randomUUID()}" else ""
         if (changeFeed) {
           // classification joins run on CHANGE-bounded inputs (matched is
@@ -2100,8 +2110,8 @@ object VersionedTable {
           val ins = tagged.filter(!col("_g_del")).select(dataCols.map(col): _*)
             .join(matchedKeys, keys, "left_anti")
             .withColumn("_change_type", lit("insert"))
-          preTyped.unionByName(post).unionByName(ins)
-            .write.mode("errorifexists").parquet(s"$location/_data/$changeDir")
+          StagedWrite.parquet(preTyped.unionByName(post).unionByName(ins),
+            s"$location/_data/$changeDir")
         }
         val matchedRows = obs.get("rows").asInstanceOf[Long]
         if (claimCommit(fs, location, latest.version + 1, "update", rows, dataDir,
@@ -2362,7 +2372,7 @@ object VersionedTable {
         stageData(merged, location, partitionBy, checks)
       val feed = cases.filter(col("_change_type") =!= "unchanged")
       val changeDir = s"c-${java.util.UUID.randomUUID()}"
-      feed.write.mode("errorifexists").parquet(s"$location/_data/$changeDir")
+      StagedWrite.parquet(feed, s"$location/_data/$changeDir")
       (dataDir, rows, stats, sstats, nulls, schemaJson, changeDir)
     } finally cases.unpersist()
   }
@@ -2414,10 +2424,11 @@ object VersionedTable {
         else None
       try {
         pinned.foreach { m =>
-          m.drop(DvFileCol, DvPosCol).withColumn("_change_type", lit("delete"))
-            .write.mode("errorifexists").parquet(s"$location/_data/$changeDir")
+          StagedWrite.parquet(
+            m.drop(DvFileCol, DvPosCol).withColumn("_change_type", lit("delete")),
+            s"$location/_data/$changeDir")
         }
-        dvRows.write.mode("errorifexists").parquet(s"$location/_data/$dvDir")
+        StagedWrite.parquet(dvRows, s"$location/_data/$dvDir")
       } finally pinned.foreach(_.unpersist())
       val deleted = obs.get("rows").asInstanceOf[Long]
       if (claimCommit(fs, location, latest.version + 1, "delete", 0L, "",
@@ -2482,9 +2493,9 @@ object VersionedTable {
           updated, location, partitioning, constraints(spark, location))
         val dvDir = s"v-${java.util.UUID.randomUUID()}"
         val obs = Observation(s"vt_dv_$dvDir")
-        matched.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-          .observe(obs, count(lit(1)).as("rows"))
-          .write.mode("errorifexists").parquet(s"$location/_data/$dvDir")
+        StagedWrite.parquet(
+          matched.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
+            .observe(obs, count(lit(1)).as("rows")), s"$location/_data/$dvDir")
         val changeDir = if (changeFeed) s"c-${java.util.UUID.randomUUID()}" else ""
         if (changeFeed) {
           val pre = matched.drop(DvFileCol, DvPosCol)
@@ -2492,8 +2503,7 @@ object VersionedTable {
           // postimages carry the recomputed generated values the staged data has
           val post = applyGenerated(updated, gen)._1
             .withColumn("_change_type", lit("update_postimage"))
-          pre.unionByName(post).write.mode("errorifexists")
-            .parquet(s"$location/_data/$changeDir")
+          StagedWrite.parquet(pre.unionByName(post), s"$location/_data/$changeDir")
         }
         val updatedRows = obs.get("rows").asInstanceOf[Long]
         if (claimCommit(fs, location, latest.version + 1, "update", rows, dataDir,
@@ -2552,20 +2562,18 @@ object VersionedTable {
     val mapping = columnMapping(spark, location)
     // single-commit data reads take the commit's recorded schema (no footer
     // inference); change dirs keep inference — their schema adds CDF columns
-    def readData(c: Commit): DataFrame = logReadSchema(Seq(c)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(dataPath(location, c))
-      case None => spark.read.parquet(dataPath(location, c))
-    }
+    def readData(c: Commit): DataFrame =
+      scanCommits(spark, Seq(c), keepMeta = false, perCommit = false,
+        logReadSchema)(c => LogFileIndex.dir(spark, dataPath(location, c)))
     val parts = cs.filter(c => c.version >= fromVersion && c.version <= toVersion)
       .flatMap { c =>
         c.operation match {
           case "append" =>
             Some(stamp(toLogical(readData(c), mapping)
               .withColumn("_change_type", lit("insert")), c))
-          case "merge" if c.change_dir.nonEmpty =>
-            Some(stamp(spark.read.parquet(s"$location/_data/${c.change_dir}"), c))
-          case "delete" | "update" if c.change_dir.nonEmpty =>
-            Some(stamp(spark.read.parquet(s"$location/_data/${c.change_dir}"), c))
+          case "merge" | "delete" | "update" if c.change_dir.nonEmpty =>
+            Some(stamp(
+              LogFileIndex.scanDir(spark, s"$location/_data/${c.change_dir}"), c))
           case "delete" =>
             // a DV delete without a materialized feed is still fully resolvable:
             // the deleted rows ARE the pre-delete snapshot's rows at the DV's
@@ -2574,7 +2582,8 @@ object VersionedTable {
             // never wrong; requires the pre-delete version to not be vacuumed.
             requireReadableFrom(spark, location, st, c.version - 1)
             val pre = snapshotWithMetaFrom(spark, location, cs, c.version - 1)
-            val dv = spark.read.parquet(dvPath(location, c))
+            val dv = LogFileIndex.scanDir(spark, dvPath(location, c),
+              schema = Some(DvSchema))
             val hinted =
               if (c.replaced_rows <= DvBroadcastMaxRows) broadcast(dv) else dv
             Some(stamp(pre.join(hinted,
@@ -2805,22 +2814,13 @@ object VersionedTable {
       // non-null counts ride the same pass; nulls = rows - nn (Delta
       // nullCount parity — 0 is recorded too, it licenses IS NULL pruning)
       (statCols ++ strCols).map(c => count(col(c)).as(s"nn_$c")))
-    val writer = df
-      .observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode("errorifexists")
-    try
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(s"$location/_data/$dataDir")
-    catch {
-      case e: Throwable =>
-        // the Observation's listener stays registered when its query fails
-        // (Spark offers no public unregister) — one dormant listener per
-        // REFUSED write, on a path that throws to the caller anyway
-        try fileSystem(df.sparkSession, location)
-          .delete(new Path(s"$location/_data/$dataDir"), true)
-        catch { case scala.util.control.NonFatal(_) => () }
-        translateCheckFailure(e)
-    }
+    // a refused write deletes its partial staging dir; the Observation's
+    // listener stays registered when its query fails (Spark offers no public
+    // unregister) — one dormant listener per REFUSED write, on a path that
+    // throws to the caller anyway
+    try StagedWrite.parquet(df.observe(obs, aggs.head, aggs.tail: _*),
+      s"$location/_data/$dataDir", partitionBy)
+    catch { case e: Throwable => translateCheckFailure(e) }
     val observed = obs.get
     val stats = statCols.flatMap { c =>
       (observed.get(s"mn_$c"), observed.get(s"mx_$c")) match {
@@ -2841,7 +2841,7 @@ object VersionedTable {
     val nulls = (statCols ++ strCols).map(c =>
       c -> (rowCount - observed(s"nn_$c").asInstanceOf[Long])).toMap
     writeBlooms(df0.sparkSession, location, dataDir, df.schema, rowCount,
-      spec, mapping)
+      partitionBy, spec, mapping)
     writeFileStats(df0.sparkSession, location, dataDir, df.schema, rowCount,
       partitionBy, spec)
     // the staged schema rides to claimCommit IN the staging tuple — a plain
@@ -2878,7 +2878,7 @@ object VersionedTable {
 
   private def writeBlooms(spark: SparkSession, location: String,
       dataDir: String, physicalSchema: org.apache.spark.sql.types.StructType,
-      rows: Long, spec: Map[String, String],
+      rows: Long, partitionBy: Seq[String], spec: Map[String, String],
       mapping: Map[String, String]): Unit = {
     val want = spec.get("prop.graft.bloom.columns").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
@@ -2897,8 +2897,9 @@ object VersionedTable {
       })
     }
     if (eligible.isEmpty) return
-    val fresh = spark.read.parquet(s"$location/_data/$dataDir")
-    val fs = fileSystem(spark, location)
+    val fresh = LogFileIndex.scanDir(spark, s"$location/_data/$dataDir", partitionBy,
+      Some(physicalSchema))
+    val fs = StagedWrite.raw(fileSystem(spark, location))
     eligible.foreach { f =>
       val bf = fresh.stat.bloomFilter(f.name, rows max 1L, BloomFpp)
       val out = fs.create(
@@ -2958,7 +2959,8 @@ object VersionedTable {
       .filter(_.matches("[A-Za-z0-9_]+"))
       .take(MaxStringStatsColumns).toSeq
     if (nCols.isEmpty && sCols.isEmpty) return
-    val fresh = spark.read.parquet(s"$location/_data/$dataDir")
+    val fresh = LogFileIndex.scanDir(spark, s"$location/_data/$dataDir", partitionBy,
+      Some(physicalSchema))
       .select(col("_metadata.file_path").as("_fp") +: (nCols ++ sCols).map(col): _*)
     val aggs = count(lit(1)).as("rows") +:
       (nCols.flatMap(c => Seq(
@@ -2992,7 +2994,7 @@ object VersionedTable {
         .map(c => s"$c=${fRows - r.getAs[Long](s"nn_$c")}").mkString(";")
       s"$rel\t$fRows\t$num\t$str\t$nulls"
     }
-    val out = fileSystem(spark, location)
+    val out = StagedWrite.raw(fileSystem(spark, location))
       .create(new Path(s"$location/_data/$dataDir/_filestats.tsv"), true)
     try out.write((lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -3624,6 +3626,9 @@ object VersionedTable {
         .withColumn(DvPosCol, col("_metadata.row_index"))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
+  // DV files have one fixed writer-controlled shape — no schema inference
+  private val DvSchema = StructType.fromDDL("file STRING, pos BIGINT")
+
   /** Subtract the live deletion vectors from a meta-carrying scan: ONE anti-join
     * on (file, pos) — broadcast while the DV total (known from the log) is small,
     * shuffle beyond that. Entries whose file a later scoped merge shadowed or a
@@ -3631,10 +3636,9 @@ object VersionedTable {
     */
   private def applyDvs(spark: SparkSession, location: String, scan: DataFrame,
       dvCommits: Seq[Commit]): DataFrame = {
-    // DV files have one fixed writer-controlled shape — no schema inference
     val dv = LogFileIndex.scan(spark,
       dvCommits.map(c => LogFileIndex.dir(spark, dvPath(location, c))), Nil,
-      Some(StructType.fromDDL("file STRING, pos BIGINT")))
+      Some(DvSchema))
     val hinted =
       if (dvCommits.map(_.replaced_rows).sum <= DvBroadcastMaxRows) broadcast(dv)
       else dv

@@ -408,7 +408,9 @@ object IvfPq {
     // ONE partition — fine for a harness corpus, a single-task sort at real
     // scale): range-partition + in-partition sort IS the global order, and
     // zipWithIndex stamps per-partition offsets (one extra count job). Ids
-    // are unique, so the mapping is identical to the window's.
+    // are unique, so the mapping is identical to the window's. Materialized
+    // once (localCheckpoint, as LakeWriter.rateProducer does): both trainers
+    // read it, and every action would otherwise re-run the stamping.
     val trainFrame = {
       val base = embeddings
         .select(col(idCol).as("__orig"), col(vecCol).as("embedding"))
@@ -421,7 +423,7 @@ object IvfPq {
       spark.createDataFrame(
         sorted.rdd.zipWithIndex().map { case (r, i) =>
           org.apache.spark.sql.Row(i, r.get(1))
-        }, outSchema)
+        }, outSchema).localCheckpoint()
     }
     val coarse = trainCoarse(trainFrame, k, iters)
     val pq = trainResidualPq(trainFrame, coarse, m0, ks, iters)

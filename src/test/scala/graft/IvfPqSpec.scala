@@ -206,4 +206,28 @@ class IvfPqSpec extends AnyFunSuite with SharedSpark {
     assert(priorOpens == 0,
       s"append must not read prior codes data files, opened $priorOpens")
   }
+
+  test("rebuildPqIndex stamps its dense train ids once for both trainers") {
+    val base = emb.filter(col("vec_id") < 200)
+    val coarse4 = IvfPq.trainCoarse(base, nlist = 4, iters = 1)
+    val dir = java.nio.file.Files.createTempDirectory("pq_stamp").toString + "/idx"
+    IvfPq.writePqIndex(base, coarse4,
+      IvfPq.trainResidualPq(base, coarse4, m = 4, ksub = 8, iters = 1), dir)
+    // every stage that computes the zipWithIndex stamping of the train frame
+    val stamping = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (s.stageInfo.rddInfos.exists(_.name == "ZippedWithIndexRDD"))
+          stamping.incrementAndGet()
+    }
+    org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      IvfPq.rebuildPqIndex(base, dir, iters = 2)
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(stamping.get == 1,
+      s"the train-id stamping ran in ${stamping.get} stages, not once")
+  }
 }

@@ -4,10 +4,13 @@ import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** A `counted://` filesystem that delegates to the local disk and counts the
-  * metadata operations the versioned-table protocol issues — the test-side
+  * metadata operations the versioned-table protocol issues (listStatus,
+  * getFileStatus, open, create, rename, mkdirs) — the test-side
   * instrument behind MetadataCallsSpec's per-snapshot-resolution FS budget.
   * Each counted call is one round-trip on an object store, so the pinned
   * budgets ARE the table's S3 cost model, measured rather than claimed.
@@ -34,6 +37,38 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
     CountingFileSystem.record("open", f)
     CountingFileSystem.shielded(super.open(f, bufferSize))
+  }
+
+  // both concrete create overloads: FileSystem.create(f, overwrite) funnels to
+  // the permissionless one, the FsPermission one calls it in turn (shielded)
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    CountingFileSystem.record("create", f)
+    CountingFileSystem.shielded(super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    CountingFileSystem.record("create", f)
+    CountingFileSystem.shielded(super.create(f, overwrite, bufferSize, replication,
+      blockSize, progress))
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    CountingFileSystem.record("rename", src)
+    CountingFileSystem.shielded(super.rename(src, dst))
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    CountingFileSystem.record("mkdirs", f)
+    CountingFileSystem.shielded(super.mkdirs(f))
+  }
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    CountingFileSystem.record("mkdirs", f)
+    CountingFileSystem.shielded(super.mkdirs(f, permission))
   }
 }
 
